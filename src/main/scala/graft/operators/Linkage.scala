@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** Probabilistic record linkage (Fellegi–Sunter shape): generate
   * candidate pairs by equi-join on blocking keys, score each pair as the
@@ -24,14 +25,17 @@ import org.apache.spark.sql.functions._
 object Linkage {
 
   /** Candidate pairs: `left` × `right` restricted to equal blocking
-    * keys. Left columns come out prefixed `a_`, right columns `b_`.
+    * keys. Left columns come out prefixed `a_`, right columns `b_`,
+    * each side renamed in one projection.
     * Null block keys never pair (SQL equality) — records with missing
     * blocking fields need a fallback blocking pass, which is standard
     * multi-pass linkage practice. */
   def candidatePairs(left: DataFrame, right: DataFrame,
                      blockKeys: Seq[String]): DataFrame = {
-    val a = left.columns.foldLeft(left)((d, c) => d.withColumnRenamed(c, s"a_$c"))
-    val b = right.columns.foldLeft(right)((d, c) => d.withColumnRenamed(c, s"b_$c"))
+    def prefixed(df: DataFrame, p: String) =
+      df.withColumnsRenamed(ListMap.from(df.columns.map(c => c -> s"$p$c")))
+    val a = prefixed(left, "a_")
+    val b = prefixed(right, "b_")
     val cond = blockKeys.map(k => col(s"a_$k") === col(s"b_$k")).reduce(_ && _)
     a.join(b, cond)
   }

@@ -3,16 +3,17 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import scala.collection.immutable.ListMap
 
 /** Source/sink layer (SURVEY.md §2.1 S1-S7).
   *
   * Scan-level concerns live here so pipelines stay declarative:
   *  - S1 `csv`: comma CSV, header + schema inference;
   *  - S2 `tsvWithFooter`: tab-separated SQL-Server `.rpt`-style export
-  *    whose trailing "(N rows affected)" footer the reference deletes
-  *    by hand (`/root/reference/clean_encounterids.py:17-19`) — here
-  *    DROPMALFORMED absorbs it: footer lines have the wrong token
-  *    count and are dropped at parse time, no manual editing;
+  *    whose trailing "(N rows affected)" / "Completion time: …" footer
+  *    the reference deletes by hand (`clean_encounterids.py:17-19`) —
+  *    here every line without a tab is dropped before parsing, so no
+  *    footer row ever reaches a cast;
   *  - S3 `dimensionCsv` / `dimensionXlsx`: small lookup workbooks,
   *    either pre-converted to CSV or read directly from `.xlsx` (JDK
   *    zip + StAX, no library dependency — see [[Xlsx]]), always
@@ -30,19 +31,24 @@ object Readers {
     spark.read.option("header", "true").option("inferSchema", "true").csv(path)
 
   /** S2: tab-separated export with possible non-tabular footer garbage.
-    * Read with an all-string schema derived from the header line (a
-    * driver-side metadata peek, not a data scan) + DROPMALFORMED so
-    * short footer rows vanish; then cast the declared timestamp
-    * columns with a pinned format (SURVEY §7.4#3 — never inference). */
+    * The all-string schema comes from the header line (a one-row peek).
+    * Footer and blank lines are the lines without a tab: they are
+    * filtered out of the raw text together with the header, and only
+    * the remaining lines are parsed as CSV. (A CSV scan cannot do this:
+    * with column pruning it pads short rows with nulls instead of
+    * treating them as malformed, so DROPMALFORMED keeps the footer.)
+    * Then the declared timestamp columns are cast with a pinned format
+    * (SURVEY §7.4#3 — never inference). Needs at least two columns. */
   def tsvWithFooter(spark: SparkSession, path: String, dateCols: Seq[String],
                     fmt: String = "yyyy-MM-dd HH:mm:ss"): DataFrame = {
-    val header = spark.read.text(path).first().getString(0)
+    val lines = spark.read.text(path)
+    val header = lines.first().getString(0)
     val schema = StructType(header.split("\t").map(c =>
       StructField(c, StringType, nullable = true)))
-    val raw = spark.read
-      .option("header", "true").option("sep", "\t").option("mode", "DROPMALFORMED")
-      .schema(schema)
-      .csv(path)
+    val raw = lines
+      .filter(col("value").contains("\t") && col("value") =!= header)
+      .select(from_csv(col("value"), schema, Map("sep" -> "\t")).as("row"))
+      .select("row.*")
     dateCols.foldLeft(raw)((df, c) => df.withColumn(c, to_timestamp(col(c), fmt)))
   }
 
@@ -72,14 +78,20 @@ object Readers {
   /** §1.3 metadata-driven rename: map opaque source codes to readable
     * names using a (code, description) dictionary. The dictionary is
     * dimension-scale by definition, so collecting it to the driver to
-    * drive the projection is correct — the *data* never moves. */
+    * drive the projection is correct — the *data* never moves.
+    *
+    * All renames go into ONE projection, analysed once: a per-column
+    * `withColumnRenamed` fold re-analyses a plan one `Project` deeper
+    * per code, quadratic driver work at the 205-code CMP width. Codes
+    * match columns through the session resolver (case-insensitive by
+    * default) and apply in dictionary order; codes absent from `df`
+    * are ignored and unmapped columns keep their position. */
   def renameByDictionary(df: DataFrame, dictionary: DataFrame,
                          codeCol: String = "CODE",
                          descCol: String = "Description"): DataFrame = {
-    val mapping = dictionary.select(col(codeCol), col(descCol))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    df.columns.foldLeft(df)((d, c) =>
-      mapping.get(c).map(d.withColumnRenamed(c, _)).getOrElse(d))
+    val mapping = ListMap.from(dictionary.select(col(codeCol), col(descCol))
+      .collect().map(r => r.getString(0) -> r.getString(1)))
+    df.withColumnsRenamed(mapping)
   }
 
   /** S4/§7.3: EAV long→wide pivot with an EXPLICIT code list (the

@@ -17,6 +17,18 @@ import org.apache.spark.sql.SparkSession
   * from interference.
   */
 object QueryTimer {
+  /** Parses `SPARK_GRAFT_EXTRA_CONF` (`k=v;k=v`). Empty segments, as a
+    * trailing `;` leaves, are skipped; any other segment without a
+    * non-empty key before `=` is rejected by name. */
+  private[graft] def extraConf(spec: String): Seq[(String, String)] =
+    spec.split(";").toSeq.filter(_.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.nonEmpty => k -> v
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_EXTRA_CONF segment '$kv' is not k=v")
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, names) = args.take(2)
     val reps = if (args.length > 2) args(2).toInt else 2
@@ -32,9 +44,8 @@ object QueryTimer {
     spark.sparkContext.setLogLevel("ERROR")
     // dev knob: arbitrary session confs (k=v;k=v) for A/B-ing
     // conf-gated behavior (e.g. graft.streaming.shufflePartitions)
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
-    })
+    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap(extraConf)
+      .foreach { case (k, v) => spark.conf.set(k, v) }
     spark.range(1000000L).selectExpr("sum(id)").collect()
     names.split(",").foreach { name =>
       val fn = graft.SparkEntry.queries(name)

@@ -215,6 +215,18 @@ class CurateOpsSpec extends SparkSpec {
       // cross pairs (1,2)/(2,1) agree on nothing; id 3/4 blocks don't meet
       got shouldBe Set((1L, 1L, 3.0), (2L, 2L, 1.0))
     }
+
+    it("prefixes candidate-pair columns a_/b_ in one projection per side") {
+      val left = Seq((1L, "ann", 10)).toDF("id", "name", "blk")
+      val right = Seq((1L, 10, 5.0)).toDF("id", "blk", "x")
+      val pairs = operators.Linkage.candidatePairs(left, right, Seq("blk"))
+      pairs.columns.toSeq shouldBe
+        Seq("a_id", "a_name", "a_blk", "b_id", "b_blk", "b_x")
+      def projects(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed.collect {
+        case p: org.apache.spark.sql.catalyst.plans.logical.Project => p
+      }.size
+      projects(pairs) shouldBe projects(left) + projects(right) + 2
+    }
   }
 
   describe("Normalize.imputeGroupMean") {

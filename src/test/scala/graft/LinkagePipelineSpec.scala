@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import scala.util.Using
 import org.apache.spark.sql.functions._
 import graft.cli.LinkagePipeline
 import graft.operators.Validation
@@ -94,6 +96,24 @@ class LinkagePipelineSpec extends SparkSpec {
       val hr1001 = e2("per_stay_stats")
         .filter($"encounterId" === 1001 && $"Variable" === "Heart Rate").head()
       hr1001.getAs[Long]("n_obs") shouldBe 2L
+    }
+
+    it("drops the SQL Server footer of both chartevents extracts before casting") {
+      val copy = Files.createTempDirectory("graft-footer")
+      try {
+        Using.resource(Files.list(Paths.get(dir)))(
+          _.forEach(f => Files.copy(f, copy.resolve(f.getFileName))))
+        for (tsv <- Seq("chartevents.ptassess.tsv", "chartevents.labresults.tsv"))
+          Files.write(copy.resolve(tsv),
+            "(11 rows affected)\nCompletion time: 2019-05-20T11:02:13\n".getBytes("UTF-8"),
+            StandardOpenOption.APPEND)
+        val footed = LinkagePipeline.runChartevents(spark, copy.toString, cohort)
+        for (report <- Seq("completeness", "per_stay_stats"))
+          withClue(report) { rowsOf(footed(report)) shouldBe rowsOf(e2(report)) }
+      } finally {
+        Using.resource(Files.walk(copy))(
+          _.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(Files.delete(_)))
+      }
     }
   }
 }
